@@ -240,7 +240,7 @@ object Queries6 {
     * above; a deployment re-derives bits from corpus size with
     * [[graft.ops.Similarity.lshBitsFor]] (constant bucket occupancy — the
     * knob that keeps candidate generation linear in data; see the 64×
-    * audit in BASELINE.md and `tools/TimeScaled`). */
+    * audit in BASELINE.md and its hash check, `tools/VerifyScaled`). */
   def q83PipelineWith(spark: SparkSession, dir: String,
       planes: Array[Array[Double]], bits: Int): DataFrame = {
     import graft.ops.{Embed, Pipeline, Rag}

@@ -238,7 +238,7 @@ object Queries8 {
 
   /** q104's exact plan with the LSH resolution parameterized — the deploy
     * knob a k× corpus retunes via [[graft.ops.Similarity.lshBitsFor]]
-    * (see `tools/TimeScaled`); the registered q104 binds the 1× fixture
+    * (see `tools/VerifyScaled`); the registered q104 binds the 1× fixture
     * resolution and is byte-identical. */
   def q104CanonicalWith(spark: SparkSession, dir: String,
       planes: Array[Array[Double]], bits: Int): DataFrame = {

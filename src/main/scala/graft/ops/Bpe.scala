@@ -104,8 +104,9 @@ object Bpe {
     * (The previous spelling checkpointed per round yet kept a
     * per-round broadcast-join leg in the plan; past ~100 rounds the
     * accumulated task graph overflowed the task-deserializer stack.
-    * `tools/TimeBpe` is the regression harness: 1024 rounds must run,
-    * flat, at the per-round floor recorded in BASELINE.md.)
+    * BpeSpec's deep-round case is the regression guard: 128 rounds run,
+    * and the vocab plan has the same depth as at 16; the per-round floor
+    * is recorded in BASELINE.md round 12.)
     *
     * A corpus that runs out of distinct pairs before `rounds` stops
     * early (the collect comes back empty). */

@@ -228,8 +228,8 @@ object Dedup {
     * checkpoint, the banding, and the verify join — the expanded arrays
     * GC-thrashed the 64× verify at default shuffle partitions until the
     * r16 partition override (BASELINE.md round 16, task 5). Rejected
-    * intermediate (measured, [[graft.tools.TimeWmh]] history in
-    * BASELINE round 17): verifying via a candidates×terms equi-join
+    * intermediate (measured, same-session A/B history in BASELINE.md
+    * round 17): verifying via a candidates×terms equi-join
     * keeps every shuffle fingerprint-width but explodes 2.5M candidates
     * × avg terms/doc through the pair-key shuffle — 2.9× slower than
     * the array spelling at sf0.1; the compact-vector join carries ~23
@@ -305,8 +305,8 @@ object Dedup {
   }
 
   /** The r16 expanded-array spelling of [[weightedMinHashLshPairs]], kept
-    * for the A/B measurement record ([[graft.tools.TimeWmh]]) and the
-    * equivalence spec: materializes the `term#1…term#min(tf,cap)`
+    * for the A/B measurement record (BASELINE.md round 17) and the
+    * equivalence spec (Wave44Spec): materializes the `term#1…term#min(tf,cap)`
     * expansion as a per-doc sorted array and rides
     * [[minHashLshPairsOn]]'s array-carrying verify join. Identical output
     * by construction; retired from q268 because the wide expanded-array
@@ -753,13 +753,15 @@ object Dedup {
     val cut = spans.join(firstOcc, Seq("fp"))
       .filter(!(col(idCol) === col(s"first_occ.$idCol")
         && col("pos") === col("first_occ.pos")))
+    // covered's id gets its own name: both sides derive from `df`, so
+    // comparing idCol with itself is a trivially-true predicate that
+    // only self-join disambiguation would rescue
     val covered = cut
-      .select(col(idCol), explode(sequence(col("pos"),
+      .select(col(idCol).as("__cid"), explode(sequence(col("pos"),
         col("pos") + lit(k.toLong - 1))).as("p"))
       .distinct()
     val kept = toks.join(covered,
-      toks(idCol) === covered(idCol) && toks("pos") === covered("p"),
-      "left_anti")
+      col(idCol) === col("__cid") && col("pos") === col("p"), "left_anti")
     val reassembled = kept.groupBy(col(idCol))
       .agg(count(lit(1)).as("n_kept"),
         array_join(
@@ -771,7 +773,7 @@ object Dedup {
     // full_outer: a fully-cut document appears only on the covered side,
     // an untouched one only on the reassembled side; no document has zero
     // tokens (split yields [''] at minimum), so no id is absent from both.
-    val removedCnt = covered.groupBy(col(idCol)).agg(count(lit(1)).as("n_removed"))
+    val removedCnt = covered.groupBy(col("__cid").as(idCol)).agg(count(lit(1)).as("n_removed"))
     reassembled.join(removedCnt, Seq(idCol), "full_outer")
       .select(col(idCol),
         (coalesce(col("n_kept"), lit(0L)) + coalesce(col("n_removed"), lit(0L)))

@@ -256,8 +256,8 @@ object Similarity {
     * part of a query's semantics; the oracle-checked queries bind the
     * fixture-sized defaults (6 bits for ≤5k vectors ⇒ this rule's own
     * output). Raising bits lowers per-table recall (P[agree]^bits), so
-    * deployments raise the table count alongside — see `tools/TimeScaled`
-    * for the worked 64× example (12 tables × 12 bits). */
+    * deployments raise the table count alongside — see BASELINE.md's 64×
+    * capstone spot-check for the worked example (12 tables × 12 bits). */
   def lshBitsFor(n: Long, targetOccupancy: Int = 80): Int = {
     require(n >= 0 && targetOccupancy >= 1)
     val buckets = math.max(1.0, n.toDouble / targetOccupancy)

@@ -7,9 +7,9 @@ import org.apache.spark.sql.SparkSession
 import graft.ops.Similarity
 
 /** Scaled-fixture CORRECTNESS dump for the LSH-graph capstones at
-  * deployment-correct resolution — the hash-check counterpart of
-  * [[TimeScaled]] (which only times): proves the `lshBitsFor` resolution
-  * knob changes COST, not SEMANTICS, by dumping q83/q104 at the re-derived
+  * deployment-correct resolution (their timings: BASELINE.md's 64×
+  * capstone spot-check): proves the `lshBitsFor` resolution knob changes
+  * COST, not SEMANTICS, by dumping q83/q104 at the re-derived
   * resolution together with oracle SQL generated at the SAME resolution
   * (`Queries6.q83SqlWith` / `Queries8.q104SqlWith`), so
   * `tools/check_oracle.py <sfDir> <outDir>` runs the DuckDB compare
@@ -21,7 +21,7 @@ import graft.ops.Similarity
   * `q106,q113` at 64×, where the LSH capstones' reach-CTE oracles are
   * DuckDB-quadratic and not worth the wait).
   *
-  * Semantics caveat carried over from [[TimeScaled]]: at 64 dims the
+  * Semantics caveat (BASELINE.md's 64× capstone spot-check): at 64 dims the
   * fixture's cosine noise floor merges the threshold-0.3/0.35 graphs into
   * giant components at k× scale. That is a property of the DATA both
   * engines see — the comparison stays exact — but it makes the oracle's

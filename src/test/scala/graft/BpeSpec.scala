@@ -203,4 +203,22 @@ class BpeSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.contains("*(1)"), s"BPE kernel fell out of codegen:\n$plan")
   }
+
+  test("deep rounds: 128 merges run and the vocab plan stays as shallow as at 16") {
+    // the regression guard behind learn's "bounded depth at ANY merge
+    // count": an earlier spelling overflowed the task deserializer near
+    // round 100. 400 seeded random words of 6-9 letters need at least one
+    // merge per distinct word, so learning cannot stop before 128 rounds.
+    val rnd = new scala.util.Random(7)
+    val words = Seq.fill(400)(Seq.fill(6 + rnd.nextInt(4))(('a' + rnd.nextInt(26)).toChar).mkString)
+    val df = words.grouped(20).zipWithIndex
+      .map { case (ws, i) => (i.toLong, ws.mkString(" ")) }.toSeq.toDF("doc_id", "text")
+    def learned(rounds: Int) = {
+      val (merges, vocab) = Bpe.learn(df, "text", rounds)
+      assert(merges.count() == rounds.toLong, s"stopped before $rounds rounds")
+      assert(vocab.count() == words.distinct.size.toLong)
+      vocab.queryExecution.logical.collect { case n => n }.size
+    }
+    assert(learned(128) == learned(16), "vocab plan depth grows with the merge count")
+  }
 }

@@ -155,4 +155,28 @@ class RegistrySpec extends SparkSpec {
       s"README says $stated named queries; SparkEntry.queries has " +
         s"${queries.size} - update the entry-points table")
   }
+
+  test("the registry builder fails on a name two waves share") {
+    val e = intercept[IllegalArgumentException](SparkEntry.union("query",
+      Seq(Map("q1_a" -> 1, "q2_b" -> 2), Map("q2_b" -> 3, "q3_c" -> 4))))
+    assert(e.getMessage.contains("q2_b"), e.getMessage)
+    assert(SparkEntry.union("query", Seq(Map("q1_a" -> 1), Map("q2_b" -> 2))) ==
+      Map("q1_a" -> 1, "q2_b" -> 2))
+  }
+
+  test("every `runMain graft.…` main the docs name exists") {
+    // deleting or renaming a main must not leave dead instructions behind
+    Seq("README.md", ".claude/skills/verify/SKILL.md").foreach { doc =>
+      val text = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(doc)), "UTF-8")
+      val mains = """runMain\s+(graft\.[\w.]*\w)""".r.findAllMatchIn(text).map(_.group(1)).toSet
+      assert(mains.nonEmpty, s"$doc names no runMain main")
+      mains.foreach { m =>
+        val cls = try Class.forName(m) catch {
+          case _: ClassNotFoundException => fail(s"$doc names `runMain $m`, which does not exist")
+        }
+        assert(cls.getMethods.exists(_.getName == "main"), s"$doc: $m has no main")
+      }
+    }
+  }
 }

@@ -26,6 +26,31 @@ class Wave10Spec extends SparkSpec {
     assert(out(3L) == ((4L, 4L, 0L, "x y z w")))
   }
 
+  test("crossDocSpanDedup builds no trivially-true join predicate") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import scala.jdk.CollectionConverters._
+    // Spark warns from Column's logger when `===` compares an attribute
+    // with itself, i.e. the join leans on self-join disambiguation
+    def columnWarnings(build: => Unit): Seq[String] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val app = new AbstractAppender("column-capture", null, null, true, Property.EMPTY_ARRAY) {
+        override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+      }
+      val logger = LogManager.getLogger(classOf[org.apache.spark.sql.Column]).asInstanceOf[Logger]
+      app.start(); logger.addAppender(app)
+      try build finally { logger.removeAppender(app); app.stop() }
+      seen.asScala.toSeq.filter(_.contains("trivially true"))
+    }
+    val df = Seq((1L, "a b c d"), (2L, "x a b c d")).toDF("doc_id", "text")
+    assert(columnWarnings(df("doc_id") === df("doc_id")).nonEmpty,
+      "the capture must see a deliberately trivial predicate")
+    val built = columnWarnings(Dedup.crossDocSpanDedup(df, "doc_id", "text", k = 3))
+    assert(built.isEmpty, built.mkString("\n"))
+  }
+
   test("crossDocSpanDedup: overlapping cut spans union their coverage") {
     // "a b c d" repeats across docs as TWO overlapping 3-spans ("a b c",
     // "b c d"); coverage of the cut copy must union to all four tokens,
